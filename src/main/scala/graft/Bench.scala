@@ -152,7 +152,7 @@ object Bench {
         Dedup.writeFingerprintStore(docs.limit(64), "text",
           "graft_warm_store", nBuckets = 2)
         val n = Dedup.exactDedupAgainst(docs.limit(64), "text",
-          "graft_warm_store", updateStore = false, nBuckets = 2).count()
+          "graft_warm_store", updateStore = false).count()
         spark.sql("DROP TABLE IF EXISTS graft_warm_store_fps")
         n
       }),
@@ -183,7 +183,7 @@ object Bench {
           "graft_warm_emb", dim = 64, bandBits = 12, bands = 5, nBuckets = 2)
         val n = Dedup.embeddingNearDupAgainst(emb.limit(64), "vec_id",
           "embedding", "graft_warm_emb", threshold = 0.99, dim = 64,
-          bandBits = 12, bands = 5, updateStore = false, nBuckets = 2).count()
+          bandBits = 12, bands = 5, updateStore = false).count()
         spark.sql("DROP TABLE IF EXISTS graft_warm_emb_bands")
         spark.sql("DROP TABLE IF EXISTS graft_warm_emb_vecs")
         n
@@ -257,6 +257,24 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
           unknown.toSeq.sorted.mkString(", "))
     }
+
+  /** a JSON string literal: quotes, backslashes and control characters
+    * escaped — the one escape for every key and value the bench line
+    * carries, so a config key or error message can never break the JSON. */
+  private[graft] def jsonString(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
+  /** `,"name":{"k":"v",…}`, or nothing when there are no pairs. */
+  private def jsonObjectField(name: String,
+                              pairs: Seq[(String, String)]): String =
+    if (pairs.isEmpty) ""
+    else pairs.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
+      .mkString(s""","$name":{""", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -333,18 +351,11 @@ object Bench {
     val ok = results.filter(_._3.isEmpty)
     val qs = ok.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val errsJson =
-      if (results.forall(_._3.isEmpty)) ""
-      else results.collect { case (k, _, Some(m)) =>
-        "\"" + k + "\":\"" + m.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-      }.mkString(""","errors":{""", ",", "}")
+    val errsJson = jsonObjectField("errors",
+      results.collect { case (k, _, Some(m)) => k -> m })
     val total = ok.map(_._2).sum
     // any non-contract config rides in the JSON so the draw self-labels
-    val extraJson =
-      if (extraConf.isEmpty) ""
-      else extraConf.map { case (k, v) =>
-        "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-      }.mkString(""","extra_conf":{""", ",", "}")
+    val extraJson = jsonObjectField("extra_conf", extraConf)
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$errsJson$extraJson,"sf":"$sfDir"}"""
     println(line)
     // ALWAYS also write the line to a dedicated file: the round-16 driver

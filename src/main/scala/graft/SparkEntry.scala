@@ -1964,7 +1964,7 @@ object SparkEntry {
         .unionAll(prev.select((col("doc_id") + 1000000L).as("doc_id"),
           col("text")))
       Dedup.exactDedupAgainst(fresh, "text", "graft_diff_store",
-          updateStore = false, nBuckets = 4)
+          updateStore = false)
         .select("doc_id").orderBy("doc_id")
     }),
     "q_source_cap" -> ((s, dir) => {
@@ -2676,7 +2676,7 @@ object SparkEntry {
       graft.sources.Sources.writeBucketed(snap, "graft_merge_base",
         "o_orderkey", 8)
       graft.sources.Sources.mergeIntoStore(s, "graft_merge_base",
-        upd.unionByName(ins).unionByName(del), "o_orderkey", nBuckets = 8)
+        upd.unionByName(ins).unionByName(del), "o_orderkey")
       s.table("graft_merge_base").orderBy("o_orderkey")
     }),
     "q_corr_matrix" -> ((s, dir) =>
@@ -3090,10 +3090,9 @@ object SparkEntry {
         graft.sources.Sources.scd2Init(snap, 0L), "graft_scd2_hist",
         "o_orderkey", 8)
       graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        upd1.unionByName(ins1).unionByName(del1), "o_orderkey", batch = 1L,
-        nBuckets = 8)
+        upd1.unionByName(ins1).unionByName(del1), "o_orderkey", batch = 1L)
       graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        ups2, "o_orderkey", batch = 2L, nBuckets = 8)
+        ups2, "o_orderkey", batch = 2L)
       s.table("graft_scd2_hist").orderBy("o_orderkey", "valid_from")
     }),
     "q_scd2_asof" -> ((s, dir) => {

@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Fused hashed-BOW quality kernel over a token (string) array: per token
-  * the md5-bucketed model weight (exactly
-  * [[graft.operators.TextAnalysis.tokenWeightMicros]] — first 4 digest
-  * bytes, % 2^31, % nBuckets, weight lookup), summed per ROW, returned as
+  * the md5-bucketed model weight ([[MinHashSigExpr.hash31Md5]] — first 4
+  * digest bytes, % 2^31 — then % nBuckets and a weight lookup), summed per ROW, returned as
   * `[n_tokens, sum_micros]` — one codegen'd expression node.
   *
   * Why a custom Expression (SURVEY §7.3 tier (b), the [[MinHashSigExpr]]
@@ -91,8 +90,7 @@ object HashedQualityExpr {
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i)) {
-        // pmod(conv(substring(md5(t),1,8),16,10), 2^31) % nBuckets —
-        // bit-identical to tokenWeightMicros (hash31Md5 IS that value)
+        // pmod(conv(substring(md5(t),1,8),16,10), 2^31) % nBuckets
         val bucket = (MinHashSigExpr.hash31Md5(xs.getUTF8String(i)) % nb).toInt
         sum += w(bucket)
       }

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.Sources
+import graft.sources.{Sources, Store}
 
 /** [EXT] Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -253,19 +253,6 @@ object Dedup {
     * by an exact SQL oracle (the xxhash64 production variant can only get a
     * rows-only check). Same (a,b) parameters (seed 42) are embedded in the
     * generated oracle SQL. */
-  /** (idCol, __x) rows with an md5-derived 31-bit shingle hash — every
-    * primitive (md5, hex parse, mod) exists in DuckDB, so pipelines built on
-    * this are exactly replicable by a SQL oracle. */
-  private def shingleHashRowsPortable(df: DataFrame, idCol: String,
-                                      textCol: String, shingleSize: Int): DataFrame = df
-    .select(col(idCol),
-      TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))).as("__toks"))
-    .select(col(idCol),
-      explode(shinglesFromTokens(col("__toks"), shingleSize, distinct = false)).as("__sh"))
-    .select(col(idCol),
-      pmod(conv(substring(md5(to_binary(col("__sh"), lit("utf-8"))), 1, 8), 16, 10)
-        .cast(LongType), lit(1L << 31)).as("__x"))
-
   /** md5-portable MinHash signatures, fused like [[minhashSigs]]: the same
     * tokens→signature kernel on the md5-derived hash base (first 4 digest
     * bytes ≡ the oracle's `conv(substring(md5(s),1,8),16,10)`), so the whole
@@ -280,13 +267,6 @@ object Dedup {
         GraftSqlBridge.expression(toks), shingleSize, numHashes,
         md5Portable = true)).as("sig"))
   }
-
-  /** md5-portable MinHash signatures via explode + one wide aggregate — the
-    * one-row-per-shingle table shape (see [[minhashSigsAgg]]). */
-  def minhashSigsPortableAgg(df: DataFrame, idCol: String, textCol: String,
-                             numHashes: Int = 16, shingleSize: Int = 3): DataFrame =
-    sigsFromShingleHash(shingleHashRowsPortable(df, idCol, textCol, shingleSize),
-      idCol, numHashes)
 
   /** bucket-local candidate self-join over banded rows (idCol, band, key):
     * distinct (id_a, id_b) pairs sharing a band key. Both sides are the same
@@ -388,7 +368,7 @@ object Dedup {
         // would be pruned): a probe/store signature-length mismatch means
         // the caller's numHashes differs from the store build — zip_with
         // would null-pad and count every padded slot as disagreement,
-        // silently letting true duplicates survive. [[checkStoreParams]]
+        // silently letting true duplicates survive. [[Store.checkParams]]
         // catches this at probe entry for stores carrying build properties;
         // this backstops pre-property stores and hand-built frames.
         when(size(col("sig")) === size(col("__ssig")),
@@ -403,48 +383,6 @@ object Dedup {
             lit(" — probe with the store's numHashes/bands")))))
       .filter(col("__est") >= threshold)
       .select(idCol).distinct()
-  }
-
-  /** persist a store's build parameters as table properties so a probe with
-    * mismatched parameters fails loudly at [[checkStoreParams]] instead of
-    * silently missing true duplicates — every store family shares the
-    * hazard: minhash numHashes/bands (unequal-length sig arrays make every
-    * zip_with element comparison a disagreement), simhash portable flag
-    * (60-bit md5 signatures never equal 64-bit xxhash64 ones), embedding
-    * dim/bandBits/bands/seed (different planes → band keys never collide
-    * with the store's). */
-  private[operators] def setStoreParams(spark: SparkSession, table: String,
-                                        params: Map[String, Any]): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      params.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'graft.$k' = '$v'" }.mkString(", ") + ")")
-
-  /** validate probe parameters against the build parameters persisted by
-    * [[setStoreParams]]. Stores written before the properties existed are
-    * accepted (nothing to check against) — the in-plan signature-width guard
-    * in [[dedupAgainstCore]] still backstops the minhash case — EXCEPT for
-    * keys listed in `required`: those mark an on-disk FORMAT version (e.g.
-    * the PQ code stores' `enc=bias128` byte encoding), where a store
-    * predating the property is not merely uncheckable but physically
-    * incompatible — probing it would decode valid-looking-but-wrong values,
-    * the exact silent-corruption class the fingerprints exist to prevent.
-    * A missing required key fails loudly with rebuild advice. */
-  private[graft] def checkStoreParams(spark: SparkSession, table: String,
-                               params: Map[String, Any],
-                               required: Set[String] = Set.empty): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    params.foreach { case (k, v) =>
-      if (required(k)) require(props.contains(s"graft.$k"),
-        s"$table has no graft.$k property — it was written by a build whose " +
-          s"on-disk format predates $k=$v; decoding it under the current " +
-          "format would return silently wrong values. Rebuild the store " +
-          "with its write* entry point")
-      props.get(s"graft.$k").foreach(stored => require(stored == v.toString,
-        s"$table was built with $k=$stored but the probe passed $k=$v — " +
-          "mismatched parameters silently miss true duplicates (signatures " +
-          "or band keys can never match); probe with the store's parameters"))
-    }
   }
 
   /** create/replace the production (xxhash64) signature store from a
@@ -466,7 +404,7 @@ object Dedup {
           .select(col(idCol), col("band_hash")),
         s"${store}_bands", "band_hash", nBuckets))
     s.unpersist(blocking = false)
-    setStoreParams(sigs.sparkSession, s"${store}_sigs",
+    Store.setParams(sigs.sparkSession, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands))
   }
 
@@ -480,10 +418,9 @@ object Dedup {
   def minhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
                           store: String, threshold: Double = 0.8,
                           numHashes: Int = 64, bands: Int = 16,
-                          updateStore: Boolean = true,
-                          nBuckets: Int = 8): DataFrame = {
+                          updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs",
+    Store.checkParams(spark, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands))
     // localCheckpoint: the new-batch signatures feed the candidate join, the
     // verify join, and the store append — compute the fused kernel once.
@@ -500,12 +437,10 @@ object Dedup {
       // them (guide §2.6); per-table append idempotency is order-free
       val survSigs = newSigs.join(dupIds, Seq(idCol), "left_anti")
       Sources.writeConcurrently(
-        () => Sources.writeBucketed(survSigs, s"${store}_sigs", idCol,
-          nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(
+        () => Store.append(s"${store}_sigs", survSigs),
+        () => Store.append(s"${store}_bands",
           lshBands(survSigs, idCol, "sig", bands, numHashes)
-            .select(col(idCol), col("band_hash")),
-          s"${store}_bands", "band_hash", nBuckets, SaveMode.Append))
+            .select(col(idCol), col("band_hash"))))
     }
     newBatch.join(dupIds, Seq(idCol), "left_anti")
   }
@@ -524,7 +459,7 @@ object Dedup {
       () => Sources.writeBucketed(portableBands(s, idCol, numHashes, bands),
         s"${store}_bands", "band_key", nBuckets))
     s.unpersist(blocking = false)
-    setStoreParams(sigs.sparkSession, s"${store}_sigs",
+    Store.setParams(sigs.sparkSession, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands))
   }
 
@@ -537,10 +472,9 @@ object Dedup {
                                   threshold: Double = 0.5,
                                   numHashes: Int = 16, bands: Int = 4,
                                   shingleSize: Int = 3,
-                                  updateStore: Boolean = false,
-                                  nBuckets: Int = 8): DataFrame = {
+                                  updateStore: Boolean = false): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs",
+    Store.checkParams(spark, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands))
     val newSigs = minhashSigsPortable(newBatch, idCol, textCol, numHashes,
       shingleSize).localCheckpoint()
@@ -553,11 +487,9 @@ object Dedup {
       // overlapped like [[minhashDedupAgainst]]'s append branch (§2.6)
       val survSigs = newSigs.join(dupIds, Seq(idCol), "left_anti")
       Sources.writeConcurrently(
-        () => Sources.writeBucketed(survSigs, s"${store}_sigs", idCol,
-          nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(
-          portableBands(survSigs, idCol, numHashes, bands),
-          s"${store}_bands", "band_key", nBuckets, SaveMode.Append))
+        () => Store.append(s"${store}_sigs", survSigs),
+        () => Store.append(s"${store}_bands",
+          portableBands(survSigs, idCol, numHashes, bands)))
     }
     newBatch.join(dupIds, Seq(idCol), "left_anti")
   }
@@ -581,8 +513,7 @@ object Dedup {
     * ([[exactDedup]] on the fingerprint): two new docs sharing a
     * fingerprint both pass the store check. */
   def exactDedupAgainst(newBatch: DataFrame, textCol: String, store: String,
-                        updateStore: Boolean = true,
-                        nBuckets: Int = 8): DataFrame = {
+                        updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
     val surv0 = newBatch
       .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
@@ -594,8 +525,7 @@ object Dedup {
         // materialize once: the append below and the caller's read would
         // otherwise each recompute the anti-join
         val s = surv0.localCheckpoint()
-        Sources.writeBucketed(s.select(col("__fp").as("fp")).distinct(),
-          s"${store}_fps", "fp", nBuckets, SaveMode.Append)
+        Store.append(s"${store}_fps", s.select(col("__fp").as("fp")).distinct())
         s
       }
     survivors.drop("__fp")
@@ -663,7 +593,7 @@ object Dedup {
                else simhashSigs(df, idCol, textCol)
     Sources.writeBucketed(sigs.select(col("simhash").as("sig")).distinct(),
       s"${store}_sigs", "sig", nBuckets)
-    setStoreParams(df.sparkSession, s"${store}_sigs",
+    Store.setParams(df.sparkSession, s"${store}_sigs",
       Map("portable" -> portable))
   }
 
@@ -675,10 +605,9 @@ object Dedup {
     * the store's build flag. */
   def simhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
                           store: String, portable: Boolean = false,
-                          updateStore: Boolean = true,
-                          nBuckets: Int = 8): DataFrame = {
+                          updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs", Map("portable" -> portable))
+    Store.checkParams(spark, s"${store}_sigs", Map("portable" -> portable))
     // signature as a DERIVED COLUMN (the fused kernel is a per-row
     // projection): one scan of the batch, no self-join on id — the
     // exactDedupAgainst shape
@@ -690,8 +619,7 @@ object Dedup {
       if (!updateStore) surv0
       else {
         val s = surv0.localCheckpoint()
-        Sources.writeBucketed(s.select(col("__sig").as("sig")).distinct(),
-          s"${store}_sigs", "sig", nBuckets, SaveMode.Append)
+        Store.append(s"${store}_sigs", s.select(col("__sig").as("sig")).distinct())
         s
       }
     survivors.drop("__sig")
@@ -740,7 +668,7 @@ object Dedup {
           Similarity.lshSignature(col(vecCol), dim, bandBits * bands, seed)
             .as("fullsig")),
         s"${store}_vecs", idCol, nBuckets))
-    setStoreParams(df.sparkSession, s"${store}_bands",
+    Store.setParams(df.sparkSession, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed, "enc" -> "bands_packed_v2"))
   }
@@ -758,10 +686,10 @@ object Dedup {
                               vecCol: String, store: String,
                               threshold: Double, dim: Int,
                               bandBits: Int = 16, bands: Int = 4,
-                              seed: Long = 42L, updateStore: Boolean = true,
-                              nBuckets: Int = 8): DataFrame = {
+                              seed: Long = 42L,
+                              updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    Store.checkParams(spark, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed, "enc" -> "bands_packed_v2"),
       required = Set("enc"))
@@ -788,7 +716,7 @@ object Dedup {
       // kernel over the batch
       val surv = newBatch.join(dupIds0, Seq(idCol), "left_anti")
         .localCheckpoint()
-      // upgrade contract: checkStoreParams accepts stores written before
+      // upgrade contract: Store.checkParams accepts stores written before
       // the fullsig column existed (the read side falls back — see
       // Streams.scala). Appending a 3-column frame to such a 2-column
       // table would throw a schema mismatch, so match the EXISTING store
@@ -802,14 +730,12 @@ object Dedup {
         else vecsOut0.drop("fullsig")
       // both appends read the checkpointed survivors — overlap them (§2.6)
       Sources.writeConcurrently(
-        () => Sources.writeBucketed(
+        () => Store.append(s"${store}_bands",
           Similarity.lshBandSignatures(surv, idCol, vecCol, dim, bandBits,
               bands, seed)
             .select(col(idCol),
-              packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs")),
-          s"${store}_bands", "__bs", nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(vecsOut, s"${store}_vecs", idCol,
-          nBuckets, SaveMode.Append))
+              packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs"))),
+        () => Store.append(s"${store}_vecs", vecsOut))
       surv
     } else newBatch.join(dupIds0, Seq(idCol), "left_anti")
   }
@@ -1683,24 +1609,9 @@ object Dedup {
           col("sim_lo"), col("sim_hi"))
         .distinct(),
       s"${store}_bands", "__bk", nBuckets)
-    setStoreParams(hashes.sparkSession, s"${store}_bands",
-      Map("kind" -> kind, "maxHamming" -> maxHamming,
-        "nBuckets" -> nBuckets, "enc" -> "dhash120_v2"))
+    Store.setParams(hashes.sparkSession, s"${store}_bands",
+      Map("kind" -> kind, "maxHamming" -> maxHamming, "enc" -> "dhash120_v2"))
   }
-
-  /** the table's persisted bucket count — appends must match the bucket
-    * spec the table was BUILT with, so this refuses (with rebuild advice,
-    * the checkStoreParams doctrine) when the property is missing rather
-    * than guessing: an append bucketed differently from the table's actual
-    * spec can fail late or silently break the no-shuffle probe contract. */
-  private[operators] def storedNBuckets(spark: SparkSession, table: String): Int =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst {
-        case r if r.getString(0) == "graft.nBuckets" => r.getString(1).toInt
-      }.getOrElse(sys.error(
-        s"$table has no graft.nBuckets property — it predates the bucket-" +
-          "spec contract, so an append cannot know the table's bucket " +
-          "count. Rebuild the store with its write* entry point"))
 
   /** append a batch of wide hashes' bands to [[writeWideHashStore]]'s bands
     * table — the store half of `updateStore = true`, exposed so streaming
@@ -1711,20 +1622,18 @@ object Dedup {
   def appendWideHashes(hashes: DataFrame, idCol: String, store: String,
                        kind: String, maxHamming: Int = 6): Unit = {
     val spark = hashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    Store.checkParams(spark, s"${store}_bands",
       Map("kind" -> kind, "maxHamming" -> maxHamming,
         "enc" -> "dhash120_v2"),
       required = Set("enc"))
     val sigs = hashes.filter(col("dh_lo").isNotNull)
       .select(col(idCol), col("dh_lo").as("sim_lo"),
         col("dh_hi").as("sim_hi"))
-    Sources.writeBucketed(
+    Store.append(s"${store}_bands",
       wideBandedFrame(sigs, idCol, 120, maxHamming)
         .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
           col("sim_lo"), col("sim_hi"))
-        .distinct(),
-      s"${store}_bands", "__bk",
-      storedNBuckets(spark, s"${store}_bands"), SaveMode.Append)
+        .distinct())
   }
 
   /** incremental wide-hash near-dup dedup against [[writeWideHashStore]]:
@@ -1743,11 +1652,10 @@ object Dedup {
                            maxHamming: Int = 6,
                            updateStore: Boolean = true): DataFrame = {
     val spark = newHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    Store.checkParams(spark, s"${store}_bands",
       Map("kind" -> kind, "maxHamming" -> maxHamming,
         "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    val nBuckets = storedNBuckets(spark, s"${store}_bands")
     val sigs = newHashes.filter(col("dh_lo").isNotNull)
       .select(col(idCol), col("dh_lo").as("sim_lo"),
         col("dh_hi").as("sim_hi"))
@@ -1769,12 +1677,11 @@ object Dedup {
     val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
     if (updateStore) {
       val s = survivors.localCheckpoint()
-      Sources.writeBucketed(
+      Store.append(s"${store}_bands",
         wideBandedFrame(s, idCol, 120, maxHamming)
           .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
             col("sim_lo"), col("sim_hi"))
-          .distinct(),
-        s"${store}_bands", "__bk", nBuckets, SaveMode.Append)
+          .distinct())
       s.select(col(idCol))
     } else survivors.select(col(idCol))
   }
@@ -1832,10 +1739,10 @@ object Dedup {
     // BUILD parameter like maxHamming: probing a store built from
     // everyK > 1 hashes with differently-sampled frames misaligns frame_no
     // keys and silently dilutes the match vote — persist it so
-    // checkStoreParams refuses loudly on mismatch instead
-    setStoreParams(frameHashes.sparkSession, s"${store}_bands",
+    // Store.checkParams refuses loudly on mismatch instead
+    Store.setParams(frameHashes.sparkSession, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
-        "nBuckets" -> nBuckets, "everyK" -> everyK, "enc" -> "dhash120_v2"))
+        "everyK" -> everyK, "enc" -> "dhash120_v2"))
   }
 
   /** the video key packs the FRAME index in with the band: one bucketed
@@ -1876,14 +1783,12 @@ object Dedup {
                              store: String, maxHamming: Int = 6,
                              everyK: Int = 1): Unit = {
     val spark = frameHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    Store.checkParams(spark, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
         "everyK" -> everyK, "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    Sources.writeBucketed(
-      videoBandedRows(frameHashes, idCol, maxHamming),
-      s"${store}_bands", "__bk",
-      storedNBuckets(spark, s"${store}_bands"), SaveMode.Append)
+    Store.append(s"${store}_bands",
+      videoBandedRows(frameHashes, idCol, maxHamming))
   }
 
   /** incremental VIDEO clip-level near-dup dedup against
@@ -1912,11 +1817,10 @@ object Dedup {
     require(minMatchedFrames >= 1,
       s"videoDedupAgainst: minMatchedFrames $minMatchedFrames")
     val spark = newFrameHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    Store.checkParams(spark, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
         "everyK" -> everyK, "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    val nBuckets = storedNBuckets(spark, s"${store}_bands")
     // the PROBE side gets the same frame_no < 2^20 injectivity guard the
     // build side enforces in videoBandedRows: an unguarded probe clip with
     // an aliased (frame, band) packed key would silently match wrong frame
@@ -1959,12 +1863,11 @@ object Dedup {
     val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
     if (updateStore) {
       val s = survivors.localCheckpoint()
-      Sources.writeBucketed(
+      Store.append(s"${store}_bands",
         videoBandedRows(
           s.select(col(idCol), col("frame_no"),
             col("sim_lo").as("dh_lo"), col("sim_hi").as("dh_hi")),
-          idCol, maxHamming),
-        s"${store}_bands", "__bk", nBuckets, SaveMode.Append)
+          idCol, maxHamming))
       s.select(col(idCol)).distinct()
     } else survivors.select(col(idCol)).distinct()
   }
@@ -3121,7 +3024,7 @@ object Dedup {
     * report. */
   def cdcDedupAgainst(newBatch: DataFrame, idCol: String, bytesCol: String,
                       store: String, updateStore: Boolean = true,
-                      nBuckets: Int = 8, minLen: Int = 32, maxLen: Int = 256,
+                      minLen: Int = 32, maxLen: Int = 256,
                       maskBits: Int = 5, batchId: Long = -1L): DataFrame = {
     val spark = newBatch.sparkSession
     val chunks = cdcChunks(newBatch, idCol, bytesCol, minLen, maxLen, maskBits)
@@ -3152,16 +3055,10 @@ object Dedup {
           .cast(LongType).as("new_bytes"),
         sum(when(col("__first"), lit(0L)).otherwise(col("chunk_len")))
           .cast(LongType).as("dup_bytes"))
-    if (updateStore) {
-      val committed = batchId >= 0 &&
-        storeTbl0.filter(col("__batch") === batchId).limit(1).count() > 0
-      if (!committed)
-        Sources.writeBucketed(
-          marked.filter(col("__first"))
-            .select(col("chunk_hash"), col("chunk_len"))
-            .withColumn("__batch", lit(batchId)),
-          s"${store}_chunks", "chunk_hash", nBuckets, SaveMode.Append)
-    }
+    if (updateStore)
+      Store.append(s"${store}_chunks",
+        marked.filter(col("__first")).select(col("chunk_hash"), col("chunk_len")),
+        batchId)
     report
   }
 }

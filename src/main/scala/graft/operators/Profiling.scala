@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
+import graft.sources.Store
 
 /** [EXT] Dataset-health operators (SURVEY §2.9 extension surface): one-pass
   * column profiling, join-key skew reporting, and robust (median/MAD)
@@ -20,28 +21,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
   * reproduces results bit-for-bit.
   */
 object Profiling {
-  private val slog = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** shared by the accreting-sketch appends: decide whether `batchTag` is
-    * new, and LOG when it is skipped as at-or-below the compacted
-    * watermark — streaming batchIds restart at 0 on a fresh checkpoint, so
-    * after a compaction a legitimately restarted ingest carrying NEW data
-    * is indistinguishable from a replay here; the log line is the
-    * operator's only way to notice (the fix is a fresh store or tags from
-    * a store-side monotone counter, not checkpoint-relative batchIds). */
-  private[operators] def shouldAppendTag(spark: SparkSession, store: String,
-                              batchTag: Long, seen: Set[Long]): Boolean = {
-    val wm = compactedWatermark(spark, store)
-    if (batchTag <= wm) {
-      slog.warn(s"$store: skipping append with batchTag=$batchTag at or " +
-        s"below compacted watermark $wm — if this ingest RESTARTED from a " +
-        "fresh checkpoint (batchIds reset to 0) this is NEW data being " +
-        "dropped as a replay; restart against a fresh store or derive " +
-        "tags from a store-side monotone counter")
-      false
-    } else !seen.contains(batchTag)
-  }
-
   /** One-pass whole-table column profile: for every column, its null count
     * and distinct count, plus the table row count — the "is this dataset
     * sane" gate run before a multi-hour job.
@@ -1054,9 +1033,10 @@ object Profiling {
     // seed tag -1 (the writeInvertedIndex convention): streaming ingest
     // batchIds start at 0 and must never collide with the seed batch
     graft.sources.Sources.writeBucketed(
-      cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag = -1L),
+      cardinalitySketchRows(df, groupCol, valueExpr, lgK)
+        .withColumn("__batch", lit(-1L)),
       store, "__g", nBuckets)
-    Dedup.setStoreParams(df.sparkSession, store,
+    Store.setParams(df.sparkSession, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"))
   }
 
@@ -1069,27 +1049,19 @@ object Profiling {
                                 df: DataFrame, groupCol: String,
                                 valueExpr: Column, lgK: Int,
                                 batchTag: Long): Unit = {
-    Dedup.checkStoreParams(spark, store,
+    Store.checkParams(spark, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"),
       required = Set("enc"))
-    val seen = spark.table(store).select("__batch").distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (shouldAppendTag(spark, store, batchTag, seen)) {
-      graft.sources.Sources.writeBucketed(
-        cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag),
-        store, "__g", nBuckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Append)
-    }
+    Store.append(store, cardinalitySketchRows(df, groupCol, valueExpr, lgK),
+      batchTag)
   }
 
   private def cardinalitySketchRows(df: DataFrame, groupCol: String,
-                                    valueExpr: Column, lgK: Int,
-                                    batchTag: Long): DataFrame =
+                                    valueExpr: Column, lgK: Int): DataFrame =
     df.select(col(groupCol).cast(StringType).as("__g"), valueExpr.as("__v"))
       .groupBy("__g")
       .agg(hll_sketch_agg(col("__v"), lgK).as("__sketch"),
         count(lit(1)).cast(LongType).as("__n"))
-      .withColumn("__batch", lit(batchTag))
 
   /** per-group estimates over the WHOLE accreted store: one sketch-union
     * aggregate over groups×batches rows — never the corpus. */
@@ -1147,11 +1119,12 @@ object Profiling {
     require(eps > 0 && eps < 1, s"writeFrequencyStore: eps $eps")
     require(confidence > 0 && confidence < 1,
       s"writeFrequencyStore: confidence $confidence")
-    frequencySketchRow(df, valueExpr, eps, confidence, seed, batchTag = -1L)
+    frequencySketchRow(df, valueExpr, eps, confidence, seed)
+      .withColumn("__batch", lit(-1L))
       .write.format("parquet")
       .mode(org.apache.spark.sql.SaveMode.Overwrite) // rebuild replaces, like every other store writer
       .saveAsTable(store)
-    Dedup.setStoreParams(df.sparkSession, store,
+    Store.setParams(df.sparkSession, store,
       Map("kind" -> "frequency_cms", "eps" -> eps,
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"))
   }
@@ -1164,29 +1137,13 @@ object Profiling {
                             df: DataFrame, valueExpr: Column, eps: Double,
                             confidence: Double, seed: Int,
                             batchTag: Long): Unit = {
-    Dedup.checkStoreParams(spark, store,
+    Store.checkParams(spark, store,
       Map("kind" -> "frequency_cms", "eps" -> eps,
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"),
       required = Set("enc"))
-    val seen = spark.table(store).select("__batch").distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (shouldAppendTag(spark, store, batchTag, seen)) {
-      frequencySketchRow(df, valueExpr, eps, confidence, seed, batchTag)
-        .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-        .saveAsTable(store)
-    }
+    Store.append(store,
+      frequencySketchRow(df, valueExpr, eps, confidence, seed), batchTag)
   }
-
-  /** the highest batch tag folded away by a compaction (Long.MinValue when
-    * the store has never compacted): a replayed tag at or below it has been
-    * applied even though its row no longer exists — the IN-DATA replay
-    * guard the accreting appends consult alongside the live tag set. */
-  private[operators] def compactedWatermark(spark: SparkSession, store: String): Long =
-    spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .collectFirst {
-        case r if r.getString(0) == "graft.compacted_watermark" =>
-          r.getString(1).toLong
-      }.getOrElse(Long.MinValue)
 
   /** Compact an accreting cardinality store IN PLACE: merge every group's
     * batch rows into ONE row. HLL union is max-per-register — associative,
@@ -1194,10 +1151,9 @@ object Profiling {
     * PROVABLY unchanged (parity-asserted in ProfilingSpec); what changes is
     * the probe's read cost, from groups×batches sketch rows (365× the
     * groups-sized read after a year of daily batches) back to groups. The
-    * missing maintenance verb every other store modality already had
-    * ([[graft.sources.Sources.compactBucketed]] precedent: staging write +
-    * drop→rename swap, crash-repaired by recoverStoreSwap, `graft.*`
-    * properties re-applied).
+    * missing maintenance verb every other store modality already had,
+    * through the same [[graft.sources.Store.replace]] swap as
+    * [[graft.sources.Sources.compactBucketed]].
     *
     * Replay contract after compaction: the folded batches' tags survive as
     * the `graft.compacted_watermark` property (= their max) — the appends
@@ -1208,17 +1164,10 @@ object Profiling {
     * every other store maintainer). `n_batches` in the estimates probe
     * counts surviving MERGE UNITS (1 per group after compaction) — the
     * estimates and n_rows are the preserved quantities. */
-  def compactCardinalityStore(spark: SparkSession, store: String,
-                              nBuckets: Int = 8): Unit = {
-    graft.sources.Sources.recoverStoreSwap(spark, store)
-    Dedup.checkStoreParams(spark, store,
-      Map("kind" -> "cardinality_hll"), required = Set.empty)
-    val props = spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
-    val staging = s"${store}__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    val merged = spark.table(store).groupBy("__g")
+  def compactCardinalityStore(spark: SparkSession, store: String): Unit = {
+    val base = Store.open(spark, store)
+    Store.checkParams(spark, store, Map("kind" -> "cardinality_hll"))
+    val merged = base.groupBy("__g")
       .agg(hll_union_agg(col("__sketch")).as("__sketch"),
         sum("__n").cast(LongType).as("__n"),
         max("__batch").cast(LongType).as("__batch"))
@@ -1226,19 +1175,8 @@ object Profiling {
     val watermark = merged.agg(max("__batch")).collect().headOption
       .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
       .getOrElse(Long.MinValue)
-    // one file per bucket: repartition on the bucketed writer's own
-    // bucket-id assignment (the compactBucketed small-files doctrine)
-    graft.sources.Sources.writeBucketed(
-      merged.repartition(nBuckets, pmod(hash(col("__g")), lit(nBuckets))),
-      staging, "__g", nBuckets)
+    Store.replace(store, merged, Map("compacted_watermark" -> watermark))
     merged.unpersist()
-    spark.sql(s"DROP TABLE $store")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $store")
-    val newProps = props.toMap +
-      ("graft.compacted_watermark" -> watermark.toString)
-    spark.sql(s"ALTER TABLE $store SET TBLPROPERTIES (" +
-      newProps.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
   }
 
   /** [[compactCardinalityStore]]'s CMS sibling: fold every batch row of an
@@ -1250,14 +1188,9 @@ object Profiling {
     * already does once); the swap/watermark/crash contract matches the
     * cardinality compactor. */
   def compactFrequencyStore(spark: SparkSession, store: String): Unit = {
-    graft.sources.Sources.recoverStoreSwap(spark, store)
-    Dedup.checkStoreParams(spark, store,
-      Map("kind" -> "frequency_cms"), required = Set.empty)
-    val props = spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
-    val rows = spark.table(store).select("__sketch", "__n", "__batch")
-      .collect()
+    val base = Store.open(spark, store)
+    Store.checkParams(spark, store, Map("kind" -> "frequency_cms"))
+    val rows = base.select("__sketch", "__n", "__batch").collect()
     require(rows.nonEmpty, s"compactFrequencyStore: $store is empty")
     val merged = org.apache.spark.util.sketch.CountMinSketch
       .readFrom(rows.head.getAs[Array[Byte]](0))
@@ -1275,26 +1208,16 @@ object Profiling {
           org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.types.StructField("__n", LongType),
         org.apache.spark.sql.types.StructField("__batch", LongType))))
-    val staging = s"${store}__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    one.write.format("parquet").saveAsTable(staging)
-    spark.sql(s"DROP TABLE $store")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $store")
-    val newProps = props.toMap +
-      ("graft.compacted_watermark" -> watermark.toString)
-    spark.sql(s"ALTER TABLE $store SET TBLPROPERTIES (" +
-      newProps.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    Store.replace(store, one, Map("compacted_watermark" -> watermark))
   }
 
   private def frequencySketchRow(df: DataFrame, valueExpr: Column,
-                                 eps: Double, confidence: Double, seed: Int,
-                                 batchTag: Long): DataFrame =
+                                 eps: Double, confidence: Double,
+                                 seed: Int): DataFrame =
     df.select(valueExpr.cast(StringType).as("__v"))
       .agg(count_min_sketch(col("__v"), lit(eps), lit(confidence),
         lit(seed)).as("__sketch"),
         count(lit(1)).cast(LongType).as("__n"))
-      .withColumn("__batch", lit(batchTag))
 
   /** merged sketch + total row count over the whole accreted store. The
     * collect here is batches-sized KILOBYTE rows (the LSH driver-side

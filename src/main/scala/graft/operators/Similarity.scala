@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Store
 
 /** [EXT] Similarity search over an embedding column (`array<float>`).
   *
@@ -50,8 +51,6 @@ object Similarity {
   def dotProduct(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
       lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
 
   /** brute-force top-k by cosine against one literal query vector.
     * Plan: scan → project(cosine) → TakeOrderedAndProject(k). */
@@ -321,7 +320,7 @@ object Similarity {
             x => x.cast(ByteType)).as("qvec"),
           col("__scale").as("scale")),
       s"${store}_q", idCol, nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_q",
+    Store.setParams(df.sparkSession, s"${store}_q",
       Map("kind" -> "int8"))
   }
 
@@ -331,7 +330,7 @@ object Similarity {
   def int8TopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                            query: Seq[Double], k: Int,
                            extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_q",
+    Store.checkParams(spark, s"${store}_q",
       Map("kind" -> "int8"))
     val qArr = array(int8QueryInts(query).map(lit): _*)
     val qdot = aggregate(
@@ -878,7 +877,7 @@ object Similarity {
       .select(col(idCol), col(vecCol).as("vec"), col("__cluster"))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("__cluster").saveAsTable(s"${store}_cells")
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_cells",
+    Store.setParams(df.sparkSession, s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
   }
@@ -895,7 +894,7 @@ object Similarity {
     * full rewrite is the offline maintenance event, not the append path. */
   def appendToIvfStore(newBatch: DataFrame, idCol: String, vecCol: String,
                        model: IvfModel, store: String): Unit = {
-    graft.operators.Dedup.checkStoreParams(newBatch.sparkSession,
+    Store.checkParams(newBatch.sparkSession,
       s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
@@ -914,7 +913,7 @@ object Similarity {
                           idCol: String, query: Seq[Double], topK: Int,
                           nprobe: Int = 4,
                           extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_cells",
+    Store.checkParams(spark, s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
     val probes = ivfProbes(model, query, nprobe)
@@ -945,7 +944,7 @@ object Similarity {
       df.select(col(idCol), col(vecCol).as("vec"),
         lshSignature(col(vecCol), dim, nBits, seed).as("sig")),
       s"${store}_sigs", "sig", nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_sigs",
+    Store.setParams(df.sparkSession, s"${store}_sigs",
       Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
   }
 
@@ -959,7 +958,7 @@ object Similarity {
                           nBits: Int = 16, seed: Long = 42L,
                           maxFlips: Int = 0,
                           extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_sigs",
+    Store.checkParams(spark, s"${store}_sigs",
       Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
     val qSig = signatureOf(query, dim, nBits, seed)
     val probes = probeSignatures(qSig, nBits, maxFlips)
@@ -1040,14 +1039,6 @@ object Similarity {
           .as("centroid_cos"))
       .orderBy(labelCol)
   }
-
-  /** IVF-style bucket stats: how balanced are the ANN buckets (diagnostic —
-    * at scale you want bucket sizes ≪ partition size). */
-  def bucketStats(df: DataFrame, vecCol: String, dim: Int, nBits: Int = 8,
-                  seed: Long = 42L): DataFrame =
-    df.select(lshSignature(col(vecCol), dim, nBits, seed).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("bucket"))
 
   // ──────────────────── product quantization (PQ) ANN ────────────────────
 
@@ -1233,9 +1224,9 @@ object Similarity {
       df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
         .withColumn("__batch", lit(-1L)),
       s"${store}_pq", idCol, nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_pq",
+    Store.setParams(df.sparkSession, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
-        "enc" -> "bias128", "nBuckets" -> nBuckets))
+        "enc" -> "bias128"))
   }
 
   /** idempotent batched append to a [[writePqStore]] store: encode the
@@ -1251,24 +1242,11 @@ object Similarity {
   def appendPqStore(df: DataFrame, idCol: String, vecCol: String,
                     model: PqModel, store: String,
                     batchId: Long = -1L): Boolean = {
-    val spark = df.sparkSession
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pq",
+    Store.checkParams(df.sparkSession, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
         "enc" -> "bias128"), required = Set("enc"))
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${store}_pq").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val nBuckets = props.getOrElse("graft.nBuckets",
-      sys.error(s"$store: no graft.nBuckets property — not an appendable " +
-        "PQ store (rebuild with writePqStore to upgrade)")).toInt
-    val committed = batchId >= 0 &&
-      spark.table(s"${store}_pq").filter(col("__batch") === batchId)
-        .limit(1).count() > 0
-    if (!committed)
-      graft.sources.Sources.writeBucketed(
-        df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
-          .withColumn("__batch", lit(batchId)),
-        s"${store}_pq", idCol, nBuckets, SaveMode.Append)
-    !committed
+    Store.append(s"${store}_pq",
+      df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")), batchId)
   }
 
   /** top-k against a [[writePqStore]] store — same result as [[pqAdcTopK]]
@@ -1278,7 +1256,7 @@ object Similarity {
   def pqAdcTopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                             query: Seq[Double], model: PqModel, k: Int,
                             extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pq",
+    Store.checkParams(spark, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
         "enc" -> "bias128"), required = Set("enc"))
     val lut = pqLutNanos(model, query)
@@ -1345,7 +1323,7 @@ object Similarity {
         col("__cluster"))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("__cluster").saveAsTable(s"${store}_pqcells")
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_pqcells",
+    Store.setParams(df.sparkSession, s"${store}_pqcells",
       Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
         "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"))
   }
@@ -1363,7 +1341,7 @@ object Similarity {
                 pq: PqModel, idCol: String, query: Seq[Double], k: Int,
                 nprobe: Int = 4,
                 extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pqcells",
+    Store.checkParams(spark, s"${store}_pqcells",
       Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
         "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"),
       required = Set("enc"))

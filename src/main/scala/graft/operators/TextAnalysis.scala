@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Store
 
 /** [EXT] Text-analysis operators for a training-data pipeline (north star in
   * BASELINE.json): language ID, quality scoring, token counting, document
@@ -27,21 +28,6 @@ object TextAnalysis {
     * same pattern, and cheaper than a lookaround split. */
   def subwordCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit("[a-z0-9]+|[^a-z0-9\\s]"), lit(0)))
-
-  /** n-character count, alphabetic ratio, punctuation ratio, mean word length
-    * — the standard cheap quality signals. */
-  def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val n = length(t).cast(DoubleType)
-    df.withColumn("n_chars_m", length(t))
-      .withColumn("n_tokens", tokenCount(t))
-      .withColumn("alpha_ratio",
-        round((n - length(regexp_replace(t, "[A-Za-z]", ""))) / n, 6))
-      .withColumn("punct_ratio",
-        round((n - length(regexp_replace(t, "[.,;:!?'\"()]", ""))) / n, 6))
-      .withColumn("mean_word_len",
-        round(length(regexp_replace(t, "\\s+", "")).cast(DoubleType) / tokenCount(t), 6))
-  }
 
   /** stopword ratio against a fixed small list (expressible in the oracle). */
   val Stopwords: Seq[String] = Seq(
@@ -103,9 +89,6 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "las", "es"),
     "fr" -> Seq("le", "les", "est", "une"),
     "de" -> Seq("der", "die", "das", "ist"))
-
-  def markerHits(text: Column, markers: Seq[String]): Column =
-    tokenHits(text, markers)
 
   def langId(text: Column): Column = {
     // argmax as `greatest` over (score, -index, lang) structs — fully
@@ -535,9 +518,7 @@ object TextAnalysis {
           .withColumn("__batch", lit(-1L)),
         s"${store}_ctx", "t1", nBuckets))
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.setStoreParams(spark, t,
-        Map("kind" -> "lm_bigram", "nBuckets" -> nBuckets,
-          "enc" -> "lm_v1")))
+      Store.setParams(spark, t, Map("kind" -> "lm_bigram", "enc" -> "lm_v1")))
   }
 
   /** append one ingest batch's pair/context counts (idempotent under
@@ -549,32 +530,18 @@ object TextAnalysis {
   def appendLmCounts(spark: org.apache.spark.sql.SparkSession, store: String,
                      df: DataFrame, textCol: String, batchTag: Long): Unit = {
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.checkStoreParams(spark, t,
+      Store.checkParams(spark, t,
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
         required = Set("enc")))
     val prs = lmPairRows(df, Seq.empty, textCol).localCheckpoint()
-    def appendTo(table: String, agg: DataFrame, bucketCol: String): Unit = {
-      val seen = spark.table(table).select("__batch").distinct()
-        .collect().map(_.getLong(0)).toSet
-      // the compacted-watermark guard (Profiling.shouldAppendTag — logs
-      // the restarted-checkpoint trap): after compactLmStore folds the
-      // batch rows away, a replayed tag's row no longer exists to dedupe
-      // against, so the watermark is what keeps replay ≠ double-count
-      if (Profiling.shouldAppendTag(spark, table, batchTag, seen)) {
-        graft.sources.Sources.writeBucketed(
-          agg.withColumn("__batch", lit(batchTag)),
-          table, bucketCol, Dedup.storedNBuckets(spark, table),
-          org.apache.spark.sql.SaveMode.Append)
-      }
-    }
     // each table's tag gate is independent — overlap the two appends
     // (§2.6); the crash contract is unchanged (each table skips the tag it
     // already holds, regardless of which append lands first)
     graft.sources.Sources.writeConcurrently(
-      () => appendTo(s"${store}_pairs",
-        prs.groupBy("pair").agg(count(lit(1)).as("cnt")), "pair"),
-      () => appendTo(s"${store}_ctx",
-        prs.groupBy("t1").agg(count(lit(1)).as("cnt")), "t1"))
+      () => Store.append(s"${store}_pairs",
+        prs.groupBy("pair").agg(count(lit(1)).as("cnt")), batchTag),
+      () => Store.append(s"${store}_ctx",
+        prs.groupBy("t1").agg(count(lit(1)).as("cnt")), batchTag))
   }
 
   /** Compact an accreting LM store IN PLACE: fold every key's batch rows
@@ -584,46 +551,29 @@ object TextAnalysis {
     * to keys. DISTRIBUTED, unlike the sketch compactors (whose rows are
     * kilobyte sketches): the pairs table is vocabulary-bounded but a
     * vocabulary at web scale is not driver-sized. Crash contract matches
-    * the sketch compactors: staged bucketed rewrite + swap
-    * ([[graft.sources.Sources.recoverStoreSwap]] heals a crash between
-    * DROP and RENAME), and the folded-away max batch tag persists as
+    * the sketch compactors: the [[graft.sources.Store.replace]] swap
+    * ([[graft.sources.Store.recover]] heals a crash between DROP and
+    * RENAME), and the folded-away max batch tag persists as
     * `graft.compacted_watermark` so a replayed tag at/below it is a no-op
     * in [[appendLmCounts]] rather than a double count. */
   def compactLmStore(spark: org.apache.spark.sql.SparkSession,
-                     store: String): Unit = {
+                     store: String): Unit =
     Seq((s"${store}_pairs", "pair"), (s"${store}_ctx", "t1")).foreach {
       case (t, key) =>
-        graft.sources.Sources.recoverStoreSwap(spark, t)
-        Dedup.checkStoreParams(spark, t,
+        val base = Store.open(spark, t)
+        Store.checkParams(spark, t,
           Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
           required = Set("enc"))
-        val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-          .map(r => r.getString(0) -> r.getString(1))
-          .filter(_._1.startsWith("graft."))
-        val nBuckets = Dedup.storedNBuckets(spark, t)
-        val staging = s"${t}__compacting"
-        spark.sql(s"DROP TABLE IF EXISTS $staging")
-        val merged = spark.table(t).groupBy(col(key))
+        val merged = base.groupBy(col(key))
           .agg(sum("cnt").cast(LongType).as("cnt"),
             max("__batch").cast(LongType).as("__batch"))
           .localCheckpoint()
         val watermark = merged.agg(max("__batch")).collect().headOption
           .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
           .getOrElse(Long.MinValue)
-        // one file per bucket (the compactBucketed small-files doctrine)
-        graft.sources.Sources.writeBucketed(
-          merged.repartition(nBuckets, pmod(hash(col(key)), lit(nBuckets))),
-          staging, key, nBuckets)
+        Store.replace(t, merged, Map("compacted_watermark" -> watermark))
         merged.unpersist()
-        spark.sql(s"DROP TABLE $t")
-        spark.sql(s"ALTER TABLE $staging RENAME TO $t")
-        val newProps = props.toMap +
-          ("graft.compacted_watermark" -> watermark.toString)
-        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-          newProps.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
     }
-  }
 
   /** the perplexity gate against the PERSISTED LM ([[writeLmStore]]) —
     * CCNet semantics: the threshold is absolute (the LM does not move with
@@ -639,7 +589,7 @@ object TextAnalysis {
     require(maxPpl > 1.0, s"lmPerplexityAgainst: maxPpl must be > 1: $maxPpl")
     val spark = df.sparkSession
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.checkStoreParams(spark, t,
+      Store.checkParams(spark, t,
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
         required = Set("enc")))
     val prs = lmPairRows(df, Seq(col(idCol)), textCol).localCheckpoint()
@@ -919,25 +869,10 @@ object TextAnalysis {
     * labelCentroids rule) and only then divided by 1e6, an exact IEEE
     * division both engines do identically — `keep` is decided on those
     * identical bits. */
-  /** integer-micros model weight of ONE token: md5 31-bit bucket mod
-    * nBuckets, 1-based element_at into the weight-literal array. The single
-    * source of truth for the hashed model's per-token math — consumed by
-    * the batch aggregate below AND the streaming per-row HOF form
-    * ([[graft.streaming.Streams.curatedIngest]]), so the two scorers cannot
-    * silently diverge on future edits (StreamsSpec additionally asserts
-    * their outputs equal). */
-  private[graft] def tokenWeightMicros(t: Column, wLit: Column,
-                                       nBuckets: Int): Column = {
-    val bucket = pmod(
-      conv(substring(md5(to_binary(t, lit("utf-8"))), 1, 8), 16, 10)
-        .cast(LongType), lit(1L << 31)) % nBuckets
-    element_at(wLit, (bucket + lit(1)).cast(IntegerType))
-  }
-
   /** micros sum + token count → logit: round the mean to integer micros at
     * scale 0 (cross-engine boundary-safe), then one exact IEEE ÷1e6 —
-    * shared by both scorer forms for the same reason as
-    * [[tokenWeightMicros]]. */
+    * shared by [[hashedQualityScore]], [[hashedQualityKeep]] and
+    * [[hashedClassify]] so their rounding cannot diverge. */
   private[graft] def logitFromMicros(sumMicros: Column,
                                      nTokens: Column): Column =
     round(sumMicros.cast(DoubleType) / nTokens).cast(LongType) / lit(1e6)
@@ -990,14 +925,14 @@ object TextAnalysis {
     * label with a deterministic tiebreak (first class in declaration order
     * wins ties — plan literals, so the tie policy is part of the model).
     *
-    * Scale shape: ONE explode + one hash aggregate carrying K sums (the
-    * [[hashedQualityScore]] postings shape widened to K columns — the
-    * shuffle carries (doc, K longs), independent of vocab or corpus), then
-    * a pure argmax projection. K is the number of DOMAINS (tens), never
-    * data-sized.
+    * Scale shape: row-local, no shuffle — ONE codegen'd
+    * [[graft.functions.HashedClassifyExpr]] projection per row (one md5
+    * bucket per token, then one add per class, returning the token count
+    * and K micros sums), then a pure argmax projection. K is the number
+    * of DOMAINS (tens), never data-sized.
     *
     * Precondition (shared with [[hashedQualityScore]]): a document with
-    * NULL or token-less text contributes no explode rows and is ABSENT
+    * NULL or token-less text scores NULL and is ABSENT
     * from the output — there is no mean logit to compute for it. Route
     * such docs explicitly upstream (e.g. the curation length gate) rather
     * than joining this frame and silently losing them. */

@@ -230,7 +230,7 @@ object Streams {
                                           seed: Long = 42L,
                                           delay: String = "10 minutes"): DataFrame = {
     val spark = vecs.sparkSession
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_bands",
+    graft.sources.Store.checkParams(spark, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed))
     val sig = (c: Column) =>
@@ -509,8 +509,7 @@ object Streams {
   def runStoreIngestOnce(spark: SparkSession, inDir: String, outDir: String,
                          checkpointDir: String, store: String,
                          textCol: String = "text", tsCol: String = "ts",
-                         delay: String = "10 minutes",
-                         nBuckets: Int = 4): Unit = {
+                         delay: String = "10 minutes"): Unit = {
     val schema = spark.read.parquet(inDir).schema
     // appends may have come from a previous run's foreachBatch session (or
     // another process entirely): refresh the cached file listing before the
@@ -532,11 +531,9 @@ object Streams {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("__batch").parquet(outDir)
-            graft.sources.Sources.writeBucketed(
+            graft.sources.Store.append(s"${store}_fps",
               b.select(graft.operators.TextAnalysis.fingerprint(col(textCol)).as("fp"))
-                .distinct(),
-              s"${store}_fps", "fp", nBuckets,
-              org.apache.spark.sql.SaveMode.Append)
+                .distinct())
             fs.mkdirs(markers)
             fs.createNewFile(marker)
             // make the appended bucket files visible to every session's
@@ -781,8 +778,8 @@ object Streams {
     * trace, and re-merging nothing is a no-op). The commit markers remain
     * as the fast path and live under the checkpoint dir so they recover
     * or reset together with the batchId sequence; the interrupted-swap
-    * repair ([[graft.sources.Sources.recoverStoreSwap]]) runs inside
-    * scd2MergeIntoStore itself.
+    * repair ([[graft.sources.Store.recover]]) runs on every open of the
+    * table, the merge's included.
     *
     * Contract (same as the search index's batchId keying): the guard
     * assumes a stable batchId→content mapping, which one checkpoint
@@ -793,10 +790,9 @@ object Streams {
     * error, as in any CDC system. */
   def runScd2IngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, table: String,
-                        keyCol: String, opCol: String = "op",
-                        nBuckets: Int = 4): Unit = {
+                        keyCol: String, opCol: String = "op"): Unit = {
     val schema = spark.read.parquet(inDir).schema
-    graft.sources.Sources.recoverStoreSwap(spark, table)
+    graft.sources.Store.recover(spark, table)
     spark.catalog.refreshTable(table)
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "scd2_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -807,12 +803,12 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
         if (!fs.exists(marker)) {
           val b = batchId + 1L
-          val applied = graft.sources.Sources.openStoreTable(s, table)
+          val applied = graft.sources.Store.open(s, table)
             .filter(col("valid_from") === b || col("valid_to") === b)
             .take(1).nonEmpty
           if (!applied)
             graft.sources.Sources.scd2MergeIntoStore(
-              s, table, batch.toDF(), keyCol, b, nBuckets, opCol)
+              s, table, batch.toDF(), keyCol, b, opCol)
           fs.mkdirs(markers)
           fs.createNewFile(marker)
           s.catalog.refreshTable(table)
@@ -881,8 +877,7 @@ object Streams {
                        checkpointDir: String, store: String,
                        reportDir: String,
                        idCol: String = "doc_id",
-                       bytesCol: String = "blob",
-                       nBuckets: Int = 8): Unit = {
+                       bytesCol: String = "blob"): Unit = {
     val schema = spark.read.parquet(inDir).schema
     spark.catalog.refreshTable(s"${store}_chunks")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "cdc_commits")
@@ -894,8 +889,7 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
         if (!fs.exists(marker)) {
           graft.operators.Dedup.cdcDedupAgainst(batch.toDF(), idCol, bytesCol,
-              store, updateStore = true, nBuckets = nBuckets,
-              batchId = batchId)
+              store, updateStore = true, batchId = batchId)
             .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
           fs.mkdirs(markers)
           fs.createNewFile(marker)

@@ -62,7 +62,7 @@ class BucketingSpec extends AnyFunSuite {
         "doc_id", "graft_incr_test", bands = 8, numHashes = 32, nBuckets = 4)
       val survivors = Dedup.minhashDedupAgainst(newBatch, "doc_id", "text",
           "graft_incr_test", threshold = 0.8, numHashes = 32, bands = 8,
-          updateStore = true, nBuckets = 4)
+          updateStore = true)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(survivors == (41L to 50L))
       // the survivors' signatures were APPENDED: a third batch duplicating a
@@ -71,7 +71,7 @@ class BucketingSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val kept3 = Dedup.minhashDedupAgainst(third, "doc_id", "text",
           "graft_incr_test", threshold = 0.8, numHashes = 32, bands = 8,
-          updateStore = false, nBuckets = 4)
+          updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(61L))
       // store tables grew by exactly the 10 batch-2 survivors
@@ -90,7 +90,7 @@ class BucketingSpec extends AnyFunSuite {
       Dedup.writeFingerprintStore(existing, "text", "graft_fp_test",
         nBuckets = 2)
       val kept = Dedup.exactDedupAgainst(newBatch, "text", "graft_fp_test",
-          updateStore = true, nBuckets = 2)
+          updateStore = true)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(kept == Seq(3L, 5L))
       // a third batch duplicating batch-2 survivor 3 drops against the
@@ -98,7 +98,7 @@ class BucketingSpec extends AnyFunSuite {
       val third = Seq((6L, "ETA theta iota?"), (7L, "nu xi omicron"))
         .toDF("doc_id", "text")
       val kept3 = Dedup.exactDedupAgainst(third, "text", "graft_fp_test",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(7L))
       // 2 seed + 2 appended survivor fingerprints
@@ -117,7 +117,7 @@ class BucketingSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val surv = Dedup.exactDedupAgainst(newBatch, "text", "graft_fp_test",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         surv.collect()
         val plan = surv.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head
@@ -140,21 +140,21 @@ class BucketingSpec extends AnyFunSuite {
       Dedup.writeSimhashStore(existing, "doc_id", "text", "graft_sh_test",
         nBuckets = 2)
       val kept = Dedup.simhashDedupAgainst(newBatch, "doc_id", "text",
-          "graft_sh_test", updateStore = true, nBuckets = 2)
+          "graft_sh_test", updateStore = true)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept == Seq(4L)) // the reordering is caught
       // the EXACT fingerprint store would have kept the reordered doc —
       // that is the gap this store member exists to close
       Dedup.writeFingerprintStore(existing, "text", "graft_sh_fp", nBuckets = 2)
       val fpKept = Dedup.exactDedupAgainst(newBatch, "text", "graft_sh_fp",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(fpKept == Seq(3L, 4L))
       // survivor signature appended: a copy of doc 4 now drops
       val third = Seq((5L, "iota theta"), (6L, "kappa lambda"))
         .toDF("doc_id", "text")
       val kept3 = Dedup.simhashDedupAgainst(third, "doc_id", "text",
-          "graft_sh_test", updateStore = false, nBuckets = 2)
+          "graft_sh_test", updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(6L))
     } finally {
@@ -175,14 +175,14 @@ class BucketingSpec extends AnyFunSuite {
         "graft_emb_test", dim = 8, bandBits = 4, bands = 2, nBuckets = 2)
       val kept = Dedup.embeddingNearDupAgainst(newBatch, "vec_id", "embedding",
           "graft_emb_test", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = true, nBuckets = 2)
+          updateStore = true)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept == Seq(7L))
       // survivor 7's vector+bands were appended: its copy now drops
       val third = Seq((9L, unit(2)), (11L, unit(3))).toDF("vec_id", "embedding")
       val kept3 = Dedup.embeddingNearDupAgainst(third, "vec_id", "embedding",
           "graft_emb_test", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept3 == Seq(11L))
       assert(spark.table("graft_emb_test_vecs").count() == 3L)
@@ -201,7 +201,7 @@ class BucketingSpec extends AnyFunSuite {
       Dedup.writeEmbeddingStore(existing, "vec_id", "embedding",
         "graft_emb_old", dim = 8, bandBits = 4, bands = 2, nBuckets = 2)
       // simulate a store written before the fullsig column existed: rewrite
-      // the vecs table with only (id, vec) — checkStoreParams documents such
+      // the vecs table with only (id, vec) — Store.checkParams documents such
       // stores as accepted, so the append path must match their schema
       val old2col = spark.table("graft_emb_old_vecs")
         .select("vec_id", "vec").collect().toSeq
@@ -212,7 +212,7 @@ class BucketingSpec extends AnyFunSuite {
       val newBatch = Seq((5L, unit(0)), (7L, unit(2))).toDF("vec_id", "embedding")
       val kept = Dedup.embeddingNearDupAgainst(newBatch, "vec_id", "embedding",
           "graft_emb_old", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = true, nBuckets = 2) // append must NOT throw
+          updateStore = true) // append must NOT throw
         .select("vec_id").as[Long].collect().toSeq
       assert(kept == Seq(7L))
       // store grew by the survivor, still 2 columns (existing schema wins)
@@ -223,7 +223,7 @@ class BucketingSpec extends AnyFunSuite {
       val third = Seq((9L, unit(2))).toDF("vec_id", "embedding")
       val kept3 = Dedup.embeddingNearDupAgainst(third, "vec_id", "embedding",
           "graft_emb_old", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept3 == Seq())
     } finally {
@@ -260,7 +260,7 @@ class BucketingSpec extends AnyFunSuite {
         .as[(Long, String)].collect()
         .collect { case (i, f) if !fpEx.contains(f) => i }.toSet
       assert(ids(Dedup.exactDedupAgainst(nwDf, "text", "graft_prop_fp",
-        updateStore = false, nBuckets = 2)) == wantExact)
+        updateStore = false)) == wantExact)
       assert(ids(Dedup.exactDedupAgainstBloom(nwDf, "text", "graft_prop_fp",
         expectedItems = 64L, numBits = 1L << 12)) == wantExact)
       assert(wantExact.size < newRows.size) // the plants actually dropped
@@ -273,7 +273,7 @@ class BucketingSpec extends AnyFunSuite {
         .as[(Long, Long)].collect()
         .collect { case (i, s) if !shEx.contains(s) => i }.toSet
       assert(ids(Dedup.simhashDedupAgainst(nwDf, "doc_id", "text",
-        "graft_prop_sh", updateStore = false, nBuckets = 2)) == wantSh)
+        "graft_prop_sh", updateStore = false)) == wantSh)
       assert(wantSh.subsetOf(wantExact)) // simhash reach ⊇ exact reach
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_prop_fp_fps")
@@ -428,7 +428,7 @@ class BucketingSpec extends AnyFunSuite {
       }
       val filesBefore = fileCount
       assert(filesBefore > 2, s"append pattern should accrete files, got $filesBefore")
-      Sources.compactBucketed(spark, "graft_compact_fps", "fp", 2)
+      Sources.compactBucketed(spark, "graft_compact_fps")
       // identical contents, one file per bucket, properties preserved
       val after = spark.table("graft_compact_fps").collect().map(_.getString(0)).sorted
       assert(after.toSeq == before.toSeq)
@@ -471,7 +471,7 @@ class BucketingSpec extends AnyFunSuite {
       spark.sql(s"SHOW TBLPROPERTIES $t").collect()
         .map(r => r.getString(0) -> r.getString(1))
         .filter(_._1.startsWith("graft.")).toMap }
-    tables.foreach { case (t, c) => Sources.compactBucketed(spark, t, c, nBuckets) }
+    tables.foreach { case (t, _) => Sources.compactBucketed(spark, t) }
     tables.zipWithIndex.foreach { case ((t, _), i) =>
       assert(tableSnapshot(t) == before(i), s"$t: contents changed")
       assert(tableFileCount(t) == nBuckets,
@@ -494,7 +494,7 @@ class BucketingSpec extends AnyFunSuite {
         Seq(("graft_cmp_mh_sigs", "doc_id"), ("graft_cmp_mh_bands", "band_hash")), 2) {
         b => Dedup.minhashDedupAgainst(docs(100L * b, 100L * b + 9, s"b$b"),
           "doc_id", "text", "graft_cmp_mh", threshold = 0.8,
-          numHashes = 32, bands = 8, updateStore = true, nBuckets = 2).count()
+          numHashes = 32, bands = 8, updateStore = true).count()
       } {
         // probe path unchanged: copies of a seed doc AND of an appended
         // batch doc drop; a fresh doc passes
@@ -502,7 +502,7 @@ class BucketingSpec extends AnyFunSuite {
           (9003L, mkText(77, "z"))).toDF("doc_id", "text")
         val kept = Dedup.minhashDedupAgainst(probe, "doc_id", "text",
             "graft_cmp_mh", threshold = 0.8, numHashes = 32, bands = 8,
-            updateStore = false, nBuckets = 2)
+            updateStore = false)
           .select("doc_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -517,13 +517,12 @@ class BucketingSpec extends AnyFunSuite {
         "graft_cmp_sh", nBuckets = 2)
       compactionParity(Seq(("graft_cmp_sh_sigs", "sig")), 2) {
         b => Dedup.simhashDedupAgainst(docs(100L * b, 100L * b + 9, s"b$b"),
-          "doc_id", "text", "graft_cmp_sh", updateStore = true,
-          nBuckets = 2).count()
+          "doc_id", "text", "graft_cmp_sh", updateStore = true).count()
       } {
         val probe = Seq((9001L, mkText(3, "e")), (9002L, mkText(105, "b1")),
           (9003L, mkText(77, "z"))).toDF("doc_id", "text")
         val kept = Dedup.simhashDedupAgainst(probe, "doc_id", "text",
-            "graft_cmp_sh", updateStore = false, nBuckets = 2)
+            "graft_cmp_sh", updateStore = false)
           .select("doc_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -549,7 +548,7 @@ class BucketingSpec extends AnyFunSuite {
         "graft_cmp_cdc", nBuckets = 2)
       compactionParity(Seq(("graft_cmp_cdc_chunks", "chunk_hash")), 2) {
         b => Dedup.cdcDedupAgainst(blobs(100L * b, 100L * b + 4), "doc_id",
-          "blob", "graft_cmp_cdc", updateStore = true, nBuckets = 2,
+          "blob", "graft_cmp_cdc", updateStore = true,
           batchId = b.toLong).count()
       } {
         // probe path unchanged after compaction: a stored seed blob and an
@@ -558,7 +557,7 @@ class BucketingSpec extends AnyFunSuite {
           (9002L, mkBytes(2000, 102L)), (9003L, mkBytes(2000, 777L)))
           .toDF("doc_id", "blob")
         val r = Dedup.cdcDedupAgainst(probe, "doc_id", "blob",
-            "graft_cmp_cdc", updateStore = false, nBuckets = 2)
+            "graft_cmp_cdc", updateStore = false)
           .collect().map(x => x.getLong(0) -> ((x.getLong(3), x.getLong(4))))
           .toMap
         assert(r(9001L)._1 == 0L && r(9002L)._1 == 0L,
@@ -585,8 +584,7 @@ class BucketingSpec extends AnyFunSuite {
         Seq(("graft_cmp_em_bands", "__bs"), ("graft_cmp_em_vecs", "vec_id")), 2) {
         b => Dedup.embeddingNearDupAgainst(emb(100L * b, 100L * b + 9),
           "vec_id", "embedding", "graft_cmp_em", threshold = 0.999,
-          dim = 8, bandBits = 4, bands = 4, updateStore = true,
-          nBuckets = 2).count()
+          dim = 8, bandBits = 4, bands = 4, updateStore = true).count()
       } {
         // cosine-1.0 re-keys of a seed vector and an appended vector drop;
         // a fresh vector passes
@@ -595,7 +593,7 @@ class BucketingSpec extends AnyFunSuite {
           .toDF("vec_id", "embedding")
         val kept = Dedup.embeddingNearDupAgainst(probe, "vec_id", "embedding",
             "graft_cmp_em", threshold = 0.999, dim = 8, bandBits = 4,
-            bands = 4, updateStore = false, nBuckets = 2)
+            bands = 4, updateStore = false)
           .select("vec_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -724,7 +722,7 @@ class BucketingSpec extends AnyFunSuite {
         maxHamming = 6, minMatchedFrames = 3, updateStore = false,
         everyK = 2).count()
       // a probe sampled at a different rate would misalign frame_no keys
-      // and silently dilute the vote — must refuse at checkStoreParams
+      // and silently dilute the vote — must refuse at Store.checkParams
       val e = intercept[IllegalArgumentException] {
         Dedup.videoDedupAgainst(probe, "media_id", "graft_ek_vi",
           maxHamming = 6, minMatchedFrames = 3, updateStore = false,

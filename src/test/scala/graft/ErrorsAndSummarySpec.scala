@@ -128,6 +128,12 @@ class ErrorsAndSummarySpec extends AnyFunSuite {
     assert(e.getMessage.contains("q_typo"))
   }
 
+  test("bench JSON strings escape quotes, backslashes and control characters") {
+    assert(Bench.jsonString("plain.key") == "\"plain.key\"")
+    assert(Bench.jsonString("a\"b\\c\nd\u0001") ==
+      "\"a\\\"b\\\\c\\u000ad\\u0001\"")
+  }
+
   test("frame summary switches raw↔summary at nrow 10 (cl-data-frame.lisp:463-476)") {
     val small = DF(spark, "x" -> Seq(1, 2, 3))
     assert(!Summary.frameSummary(small.toSpark).contains("%")) // raw rows

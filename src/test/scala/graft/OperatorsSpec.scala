@@ -1867,7 +1867,7 @@ class OperatorsSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(dfIncr == dfFull)
       // maintenance-window compaction preserves results
-      Sources.compactBucketed(spark, "graft_search_incr_postings", "term", 2)
+      Sources.compactBucketed(spark, "graft_search_incr_postings")
       assert(res("graft_search_incr") == res("graft_search_full"))
     } finally Seq("graft_search_incr_postings", "graft_search_incr_terms",
       "graft_search_full_postings", "graft_search_full_terms")
@@ -1899,8 +1899,7 @@ class OperatorsSpec extends AnyFunSuite {
       val b3 = Seq((4L, "scan solo")).toDF("doc_id", "text")
       val b3posts = Seq(("scan", 4L, 1L, 2L), ("solo", 4L, 1L, 2L))
         .toDF("term", "doc_id", "tf", "dl")
-      Search.appendBatchOnce(spark, b3posts, "graft_search_idem_postings",
-        2, batchId = 9L)
+      graft.sources.Store.append("graft_search_idem_postings", b3posts, 9L)
       val partial = state
       // torn-window READ semantics (postings visible, terms missing): a
       // term new in batch 9 has no terms row → its postings drop out of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Profiling
-import graft.sources.Sources
+import graft.sources.{Sources, Store}
 
 class ProfilingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -234,14 +234,41 @@ class ProfilingSpec extends AnyFunSuite {
         Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), t, "k", 4)
       Sources.mergeIntoStore(spark, t,
         Seq((2L, 21L, "upsert"), (3L, 0L, "delete")).toDF("k", "v", "op"),
-        "k", nBuckets = 4)
+        "k")
       assert(spark.table(t).collect().map(r => r.getLong(0) -> r.getLong(1))
         .toMap == Map(1L -> 10L, 2L -> 21L))
       // the swapped-in table must still be a usable merge target
       Sources.mergeIntoStore(spark, t,
-        Seq((4L, 40L, "upsert")).toDF("k", "v", "op"), "k", nBuckets = 4)
+        Seq((4L, 40L, "upsert")).toDF("k", "v", "op"), "k")
       assert(spark.table(t).count() == 3)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("mergeIntoStore/scd2MergeIntoStore keep graft.* properties and the bucket spec through the swap") {
+    val t = "graft_merge_props_spec"
+    val h = "graft_scd2_props_spec"
+    Seq(t, h).foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    def spec(x: String) = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(x)).bucketSpec
+      .map(b => (b.numBuckets, b.bucketColumnNames))
+    try {
+      Sources.writeBucketed(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t, "k", 3)
+      Sources.writeBucketed(Sources.scd2Init(
+        Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), 0L), h, "k", 3)
+      Seq(t, h).foreach(x => Store.setParams(spark, x,
+        Map("kind" -> "snapshot", "owner" -> "spec")))
+      Sources.mergeIntoStore(spark, t,
+        Seq((2L, 21L, "upsert")).toDF("k", "v", "op"), "k")
+      Sources.scd2MergeIntoStore(spark, h,
+        Seq((2L, 21L, "upsert")).toDF("k", "v", "op"), "k", 1L)
+      Seq(t, h).foreach { x =>
+        assert(Store.params(spark, x) ==
+          Map("kind" -> "snapshot", "owner" -> "spec"), s"$x lost its properties")
+        assert(spec(x).contains((3, Seq("k"))), s"$x changed its bucket spec")
+      }
+      assert(spark.table(t).collect().map(r => r.getLong(0) -> r.getLong(1))
+        .toMap == Map(1L -> 10L, 2L -> 21L))
+    } finally Seq(t, h).foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 
   test("mergeSnapshot on co-bucketed stores: anti-join shuffles neither side") {
@@ -738,6 +765,39 @@ class ProfilingSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterNew == oneShot3,
       "post-compaction append diverged from the 3-batch one-shot")
+  }
+
+  test("cardinality sketch store at nBuckets = 4: write, append, compact, append again") {
+    import graft.operators.Profiling
+    import org.apache.spark.sql.functions.col
+    val batch = (b: Int, n: Int) =>
+      (1 to n).map(i => (s"g${i % 3}", s"b${b}v${i % 29}")).toDF("g", "v")
+    val store = "graft_card_store_nb4"
+    val oneShot = "graft_card_store_nb4_oneshot"
+    Seq(store, oneShot).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    def est(t: String) = Profiling.cardinalityEstimates(spark, t).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def buckets = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(store)).bucketSpec
+      .map(_.numBuckets)
+    try {
+      Profiling.writeCardinalityStore(batch(0, 120), "g", col("v"), store,
+        lgK = 12, nBuckets = 4)
+      // the append reads the table's own bucket count: a hard-coded count
+      // that differs is rejected by Spark as a bucket-spec mismatch
+      Profiling.appendCardinalitySketches(spark, store, batch(1, 90), "g",
+        col("v"), lgK = 12, batchTag = 1L)
+      Profiling.compactCardinalityStore(spark, store)
+      assert(buckets.contains(4), s"compaction changed the bucket count: $buckets")
+      assert(spark.table(store).count() == 3L, "one merged row per group")
+      Profiling.appendCardinalitySketches(spark, store, batch(2, 60), "g",
+        col("v"), lgK = 12, batchTag = 2L)
+      assert(buckets.contains(4))
+      Profiling.writeCardinalityStore(
+        batch(0, 120).union(batch(1, 90)).union(batch(2, 60)), "g", col("v"),
+        oneShot, lgK = 12)
+      assert(est(store) == est(oneShot), "accreted store diverged from one-shot")
+    } finally Seq(store, oneShot).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("LM store: gate against own-corpus store == refit filter; append == rebuild; replayed tag no-op") {

@@ -184,7 +184,7 @@ class SkewAndIvfSpec extends AnyFunSuite {
       assert(accreted > nCells, s"appends should accrete files: $accreted")
       Sources.compactPartitioned(spark, "graft_ivf_ing_cells", "__cluster")
       // one file per populated cell, identical probe results, fingerprint
-      // property preserved (the probe's checkStoreParams still passes)
+      // property preserved (the probe's Store.checkParams still passes)
       assert(cellFiles == nCells,
         s"expected $nCells files (one per cell), got $cellFiles")
       assert(probe == before, "compaction changed probe results")

@@ -763,21 +763,21 @@ class StreamsSpec extends AnyFunSuite {
     drop((1L, "alpha doc kept", "2024-01-01 10:00:00"),
          (2L, "bravo new doc", "2024-01-01 10:00:01"),
          (3L, "bravo new doc", "2024-01-01 10:00:02"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // drop 2 lands while the query is DOWN — equivalent to a crash between
     // micro-batches: a fresh doc a DAY later, which advances the watermark
     // far past bravo's dedup state (10:00 + 10 min ≪ day-2 09:50), so that
     // state is evicted at this batch's end
     drop((4L, "charlie fresh", "2024-01-02 10:00:00"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // drop 3: bravo RE-ARRIVES after its in-watermark state is gone — only
     // the store append from run 1 (the loop closure under test) can drop
     // it now; delta is the batch's survivor
     drop((5L, "bravo new doc", "2024-01-02 12:00:00"),
          (6L, "delta latest", "2024-01-02 12:00:01"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // idle restart: recovery must be a no-op (no batch re-delivery effects)
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     val got = spark.read.parquet(out).select("text").as[String]
       .collect().sorted.toSeq
     assert(got == Seq("bravo new doc", "charlie fresh", "delta latest"),
@@ -877,8 +877,7 @@ class StreamsSpec extends AnyFunSuite {
     Dedup.writeChunkStore(Dedup.cdcChunks(b0, "doc_id", "blob"),
       "graft_cdcing", nBuckets = 2)
     b1.write.mode("append").parquet(inDir)
-    Streams.runCdcIngestOnce(spark, inDir, ckpt, "graft_cdcing", reports,
-      nBuckets = 2)
+    Streams.runCdcIngestOnce(spark, inDir, ckpt, "graft_cdcing", reports)
     try {
       def storeHashes = spark.table("graft_cdcing_chunks")
         .select("chunk_hash").as[Long].collect().toSet
@@ -896,7 +895,7 @@ class StreamsSpec extends AnyFunSuite {
       // replay with a FRESH checkpoint: batchIds restart, markers blind —
       // the __batch in-data gate must keep store AND report unchanged
       Streams.runCdcIngestOnce(spark, inDir, s"$base/ckpt2", "graft_cdcing",
-        reports, nBuckets = 2)
+        reports)
       assert(storeHashes == afterStream, "replay changed the chunk store")
       assert(report == rep1, "replay changed the admission report")
       // final store state equals a from-scratch rebuild over both batches
