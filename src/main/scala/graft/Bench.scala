@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
@@ -27,7 +28,7 @@ object Bench {
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     import graft.operators.{Dedup, Similarity}
     val docs: DataFrame =
-      try spark.read.parquet(s"$sfDir/documents.parquet")
+      try Sources.readParquet(spark, s"$sfDir/documents.parquet")
         .select("doc_id", "text").limit(256).localCheckpoint()
       catch {
         case _: Throwable =>
@@ -37,7 +38,7 @@ object Bench {
             .as("text")).localCheckpoint()
       }
     val emb: DataFrame =
-      try spark.read.parquet(s"$sfDir/embeddings.parquet")
+      try Sources.readParquet(spark, s"$sfDir/embeddings.parquet")
         .limit(128).localCheckpoint()
       catch {
         case _: Throwable =>
@@ -310,7 +311,7 @@ object Bench {
     // warm the session once (scheduler, parquet reader, codegen bootstrap,
     // and every heavy expression family — see warmup) so no timed query is
     // charged for one-time engine initialization
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    try Sources.readParquet(spark, s"$sfDir/region.parquet").count()
     catch { case _: Throwable => spark.range(1000).count() }
     val t0w = System.nanoTime()
     warmup(spark, sfDir)

@@ -629,7 +629,7 @@ object DF {
   }
 
   def readParquet(spark: SparkSession, path: String, orderBy: Seq[String] = Nil): DF =
-    fromSpark(spark.read.parquet(path), orderBy)
+    fromSpark(graft.sources.Sources.readParquet(spark, path), orderBy)
 
   /** append a dense 0-based id in the plan's current row order —
     * the distributed zipWithIndex shape (per-partition counts + offsets),

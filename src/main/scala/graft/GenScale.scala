@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 import java.nio.file.{Files, Paths}
 
 /** One-off scale-up generator for the round-10 empirical stress (verdict
@@ -44,7 +45,7 @@ object GenScale {
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(out))
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Sources.readParquet(spark, s"$src/documents.parquet")
       .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
     val salted = array_join(
       transform(split(col("text"), " "), (t, i) =>
@@ -58,7 +59,7 @@ object GenScale {
       .repartition(col("doc_id"))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Sources.readParquet(spark, s"$src/embeddings.parquet")
       .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
     val dim = size(col("embedding"))
     // rotate by __r mod dim: factor may exceed the embedding dimension
@@ -83,7 +84,7 @@ object GenScale {
     // grows with the fact table isn't a broadcast dim.
     val off = col("__r") * 10000000L
     def replicate(table: String, bump: Map[String, String => org.apache.spark.sql.Column]): Unit = {
-      val src0 = spark.read.parquet(s"$src/$table.parquet")
+      val src0 = Sources.readParquet(spark, s"$src/$table.parquet")
         .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
       val out0 = src0.columns.filter(_ != "__r").foldLeft(src0) { (d, c) =>
         bump.get(c).map(f => d.withColumn(c, f(c))).getOrElse(d)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Diagnostic main for the MULTI-BATCH accreted CDC chunk store (round-18
   * verdict item #3): split the corpus into `batches` disjoint doc_id
@@ -33,7 +34,7 @@ object ProbeCdcStore {
     import graft.operators.Dedup
 
     val store = "graft_probe_cdc"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Sources.readParquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text").cast("binary").as("blob"))
       .localCheckpoint()
     def slice(b: Int) = docs.filter(pmod(col("doc_id"), lit(batches)) === b)

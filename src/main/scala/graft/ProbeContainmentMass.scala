@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 import org.apache.spark.sql.types.DecimalType
 
 /** Calibration probe for [[graft.operators.Dedup.DefaultMaxCandidateMass]]:
@@ -26,7 +27,7 @@ object ProbeContainmentMass {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { dir =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Sources.readParquet(spark, s"$dir/documents.parquet")
       val nDocs = docs.count()
       val lg = math.log(math.max(nDocs, 2L).toDouble) / math.log(2.0)
       // the two registered profiles: q_containment's lossless VALVE

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 import graft.operators.Similarity
 
 /** Cell-size probe for the corpus-scaled IVF blocking (round-12 verdict
@@ -25,7 +26,7 @@ object ProbeIvfCells {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Sources.readParquet(spark, s"$dir/embeddings.parquet")
     val n = emb.count()
     val k = Similarity.autoK(n)
     val t0 = System.nanoTime()

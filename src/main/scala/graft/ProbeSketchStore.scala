@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Diagnostic main for the accreting HLL/CMS sketch stores' COMPACTION
   * (round-18 verdict item #1): split the corpus into `batches` doc_id
@@ -32,7 +33,7 @@ object ProbeSketchStore {
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Profiling
 
-    val tok = spark.read.parquet(s"$sfDir/documents.parquet")
+    val tok = Sources.readParquet(spark, s"$sfDir/documents.parquet")
       .select(col("source"), col("doc_id"),
         explode(filter(split(lower(trim(col("text"))), "\\s+"),
           t => length(t) > lit(0))).as("__tok"))

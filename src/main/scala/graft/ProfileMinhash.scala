@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** One-off stage breakdown for the MinHash dedup pipeline. */
 object ProfileMinhash {
@@ -14,8 +15,8 @@ object ProfileMinhash {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    spark.read.parquet(s"$sfDir/region.parquet").count() // warm session
+    val docs = Sources.readParquet(spark, s"$sfDir/documents.parquet")
+    Sources.readParquet(spark, s"$sfDir/region.parquet").count() // warm session
 
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -25,7 +25,7 @@ import graft.streaming.Streams
 object SparkEntry {
 
   private def rd(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(s, s"$dir/$name.parquet")
 
   /** offline-built IVF models, one per sf dir (q_ivf_ann times probing, not
     * index construction — the sampled fit runs once per JVM). */

@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   /** language + quality gates → fingerprint dedup → portable MinHash-LSH
-    * near-dedup → hash sample. Returns surviving rows of `df` unchanged. */
+    * near-dedup → hash sample. Returns surviving rows of `df` unchanged.
+    *
+    * Precondition: `idCol` is unique. It is not checked (a uniqueness
+    * count would add a job to every run); rows sharing an id share the
+    * dedup tiebreaks and the sample draw. */
   def curate(df: DataFrame, idCol: String, textCol: String,
              lang: String = "en", minQuality: Double = 0.6,
              nearDupThreshold: Double = 0.5,
@@ -60,7 +64,15 @@ object Curation {
     * stage's output feeds multiple downstream references (gate survivors,
     * decontaminated corpus, exact survivors, near survivors) — at 100 TB
     * each is the standard write-the-filtered-corpus materialization between
-    * pipeline phases. */
+    * pipeline phases.
+    *
+    * Precondition: `idCol` is unique (not checked, as in [[curate]]). The
+    * learned quality gate scores each ROW alone, so its keep set equals
+    * the grouped [[TextAnalysis.hashedQualityScore]] + semi-join form only
+    * under unique ids: that form pooled the tokens of every row sharing an
+    * id into one score and kept or dropped them together. Round4OpsSpec
+    * pins the per-row behaviour on a shared id. Decontamination drops by
+    * id, so a flagged row also takes its id-mates with it. */
   def curateFull(df: DataFrame, idCol: String, textCol: String,
                  bench: DataFrame, benchTextCol: String,
                  modelWeightsMicros: Seq[Long],
@@ -77,8 +89,8 @@ object Curation {
     // the learned-quality stage as a ROW-LOCAL codegen'd filter (r22): the
     // hashedQualityScore + semi-join form shuffled the gated corpus through
     // an explode + hash aggregate and joined it back — for a per-row
-    // decision. Same kernel, same keep set (NULL for token-less docs drops
-    // under filter exactly as absence dropped under the semi-join).
+    // decision. Same kernel, same keep set under unique ids (NULL for
+    // token-less docs drops under filter as absence did under the semi-join).
     val modeled = gated.filter(
       TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
         keepLogit))
@@ -105,7 +117,8 @@ object Curation {
     * output contract narrows to (idCol, textCol) with the excised
     * (normalized-token) text; fully-excised husks are dropped by an
     * explicit empty-text gate before the final sample — the only stage
-    * where this pipeline discards a substring-flagged document. */
+    * where this pipeline discards a substring-flagged document. Same
+    * unique-`idCol` precondition as [[curateFull]]. */
   def curateFullExcise(df: DataFrame, idCol: String, textCol: String,
                        bench: DataFrame, benchTextCol: String,
                        modelWeightsMicros: Seq[Long],
@@ -122,8 +135,8 @@ object Curation {
     // the learned-quality stage as a ROW-LOCAL codegen'd filter (r22): the
     // hashedQualityScore + semi-join form shuffled the gated corpus through
     // an explode + hash aggregate and joined it back — for a per-row
-    // decision. Same kernel, same keep set (NULL for token-less docs drops
-    // under filter exactly as absence dropped under the semi-join).
+    // decision. Same kernel, same keep set under unique ids (NULL for
+    // token-less docs drops under filter as absence did under the semi-join).
     val modeled = gated.filter(
       TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
         keepLogit))

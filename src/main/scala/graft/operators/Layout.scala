@@ -137,8 +137,8 @@ object Layout {
     val bak = new org.apache.hadoop.fs.Path(path + ".zcompact_old")
     recoverZCompact(spark, path) // an interrupted predecessor's swap
     fs.delete(tmp, true) // a predecessor's uncommitted rewrite is garbage
-    writeZOrdered(spark.read.parquet(path), tmp.toString, a, b, bits,
-      numFiles)
+    writeZOrdered(graft.sources.Sources.readParquet(spark, path),
+      tmp.toString, a, b, bits, numFiles)
     fs.delete(bak, true)
     if (!fs.rename(p, bak))
       sys.error(s"compactZOrdered: rename $p -> $bak failed")

@@ -421,7 +421,15 @@ object Relational {
     * (a CDF's denominator) get them for zero extra jobs instead of a
     * separate aggregate-and-broadcast pass. Same contract as the
     * single-column form; result proven equal to sequential single-column
-    * calls in the spec. */
+    * calls in the spec.
+    *
+    * NULL order keys: such rows are KEPT and sort first, as an ascending
+    * Spark window puts them (NULLS FIRST), so the result is still the
+    * single-window answer and the totals are the real column sums. A frame
+    * whose keys are all NULL is therefore not "empty input": its rows come
+    * back with prefixes among themselves (ties, like any duplicate key)
+    * and nonzero totals. Callers that want NULLs out filter them first
+    * ([[Analytics.ksDrift]] does). */
   def globalPrefixSums(df: DataFrame, orderCol: String,
                        valueCols: Seq[String], prefixCols: Seq[String],
                        nBuckets: Int = 256): (DataFrame, Seq[Long]) = {
@@ -430,15 +438,19 @@ object Relational {
       s"valueCols (${valueCols.length}) and prefixCols (${prefixCols.length}) " +
         "must pair up")
     val spark = df.sparkSession
+    // the row count rides the bounds aggregate (no extra job): a NULL min
+    // means "all keys NULL" unless the frame is really empty
     val bounds = df.agg(min(col(orderCol)).cast("long"),
-      max(col(orderCol)).cast("long")).head()
-    if (bounds.isNullAt(0)) // empty input: schema-stable, zero rows
+      max(col(orderCol)).cast("long"), count(lit(1))).head()
+    if (bounds.getLong(2) == 0L) // empty input: schema-stable, zero rows
       return (prefixCols.foldLeft(df)((d, p) => d.withColumn(p, lit(0L))),
         valueCols.map(_ => 0L))
-    val lo = bounds.getLong(0)
-    val width = math.max(1L, (bounds.getLong(1) - lo) / nBuckets + 1)
+    val lo = if (bounds.isNullAt(0)) 0L else bounds.getLong(0)
+    val width = if (bounds.isNullAt(0)) 1L
+      else math.max(1L, (bounds.getLong(1) - lo) / nBuckets + 1)
+    // NULL keys go to bucket -1, ahead of every real bucket
     val bucketed = df.withColumn("__bucket",
-      expr(s"(CAST(`$orderCol` AS BIGINT) - ${lo}L) div ${width}L"))
+      expr(s"coalesce((CAST(`$orderCol` AS BIGINT) - ${lo}L) div ${width}L, -1L)"))
     val aggs = valueCols.map(c => sum(col(c)).cast("long").as(s"__s_$c"))
     val partials = bucketed.groupBy("__bucket")
       .agg(aggs.head, aggs.tail: _*)

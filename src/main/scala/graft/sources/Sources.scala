@@ -3,6 +3,11 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** [EXT] Sources and sinks (SURVEY §2.9 row 42). The reference has no IO at
   * all — data enters via lisp literals (cl-data-frame.lisp:315-322) — so this
@@ -21,8 +26,54 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** parquet read with the schema taken from ONE footer, read on the
+    * driver. Without a schema, `spark.read.parquet` runs a schema-inference
+    * Spark job (~100 ms) before the query even starts; with
+    * `mergeSchema=false` that job reads a single footer — the first data
+    * file in path order — through [[ParquetToSparkSchemaConverter]] under
+    * the session's settings (`nanosAsLong`, NTZ inference, Spark's stored
+    * row schema). This reads the same file through the same converter,
+    * with no job. Partition columns are still inferred from the paths by
+    * Spark's file index, so the frame's schema is the inferred one
+    * (ReadParquetSpec). A missing path, or one holding no data file,
+    * fails with the path in the message. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** the schema an inferring parquet read of `path` gives, partition
+    * columns included, without the inference job (see [[readParquet]]). */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    readParquet(spark, path).schema
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = firstDataFile(fs, fs.getFileStatus(root)).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"readParquet: no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** the first file under `st` in full-path order, passing over the names
+    * Spark's file index hides (`_*` other than `k=v` dirs, `.*`,
+    * `*._COPYING_` — so `_SUCCESS`, `.crc` files and `_spark_metadata`).
+    * A directory sorts as `name/`, so this depth-first walk meets files in
+    * the order of their full path strings, the order inference sorts by. */
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else fs.listStatus(st.getPath)
+      .filterNot { c =>
+        val n = c.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }
+      .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+      .iterator.flatMap(firstDataFile(fs, _)).nextOption()
 
   /** schema-first CSV read; header assumed, schema inference only when no
     * schema is passed (fine locally, avoid at scale). */
@@ -174,7 +225,7 @@ object Sources {
     * happened: two FileSystem existence probes. */
   def openZOrdered(spark: SparkSession, path: String): DataFrame = {
     graft.operators.Layout.recoverZCompact(spark, path)
-    spark.read.parquet(path)
+    readParquet(spark, path)
   }
 
   /** raw binary-file ingest — the media on-ramp for the multimodal pipeline

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import graft.sources.Sources
 
 /** [EXT] Structured Streaming surface over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props). The reference has no
@@ -455,7 +456,7 @@ object Streams {
   def runFileStream(spark: SparkSession, dir: String,
                     transform: DataFrame => DataFrame,
                     queryName: String, outputMode: String = "append"): Unit = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = Sources.parquetSchema(spark, dir)
     val stream = spark.readStream.schema(schema).parquet(dir)
     val q = transform(stream).writeStream
       .outputMode(outputMode).format("memory").queryName(queryName).start()
@@ -475,7 +476,7 @@ object Streams {
   def runFileStreamOnce(spark: SparkSession, inDir: String, outDir: String,
                         checkpointDir: String,
                         transform: DataFrame => DataFrame): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     val q = transform(spark.readStream.schema(schema).parquet(inDir))
       .writeStream.outputMode("append").format("parquet")
       .option("path", outDir)
@@ -510,7 +511,7 @@ object Streams {
                          checkpointDir: String, store: String,
                          textCol: String = "text", tsCol: String = "ts",
                          delay: String = "10 minutes"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     // appends may have come from a previous run's foreachBatch session (or
     // another process entirely): refresh the cached file listing before the
     // stream-static join plan binds to it
@@ -590,7 +591,7 @@ object Streams {
                                  hashFn: DataFrame => DataFrame,
                                  probe: DataFrame => DataFrame,
                                  append: DataFrame => Unit): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(s"${store}_bands")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, markerDirName)
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -689,7 +690,7 @@ object Streams {
                     maxPpl: Double,
                     idCol: String = "doc_id",
                     textCol: String = "text"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     Seq(s"${store}_pairs", s"${store}_ctx")
       .foreach(t => spark.catalog.refreshTable(t))
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -732,7 +733,7 @@ object Streams {
                           checkpointDir: String, store: String,
                           idCol: String = "doc_id",
                           textCol: String = "text"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(s"${store}_postings")
     spark.catalog.refreshTable(s"${store}_terms")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "index_commits")
@@ -791,7 +792,7 @@ object Streams {
   def runScd2IngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, table: String,
                         keyCol: String, opCol: String = "op"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     graft.sources.Store.recover(spark, table)
     spark.catalog.refreshTable(table)
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "scd2_commits")
@@ -837,7 +838,7 @@ object Streams {
                       model: graft.operators.Similarity.PqModel,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(s"${store}_pq")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "pq_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -878,7 +879,7 @@ object Streams {
                        reportDir: String,
                        idCol: String = "doc_id",
                        bytesCol: String = "blob"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(s"${store}_chunks")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "cdc_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -914,7 +915,7 @@ object Streams {
                         checkpointDir: String, store: String,
                         valueCol: String, eps: Double, confidence: Double,
                         seed: Int): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(store)
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "freq_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -953,7 +954,7 @@ object Streams {
                         checkpointDir: String, store: String,
                         groupCol: String, valueCol: String,
                         lgK: Int): Unit = {
-    val schema = spark.read.parquet(inDir).schema
+    val schema = Sources.parquetSchema(spark, inDir)
     spark.catalog.refreshTable(store)
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "card_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)

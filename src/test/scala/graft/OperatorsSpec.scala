@@ -1647,6 +1647,35 @@ class OperatorsSpec extends AnyFunSuite {
       et == Seq(0L, 0L))
   }
 
+  test("globalPrefixSums: NULL order keys are kept, sort first, count in totals") {
+    import graft.operators.Relational
+    import org.apache.spark.sql.expressions.Window
+    // all keys NULL: not "empty input" — every row back, real totals, and
+    // the prefixes an exclusive scan of the rows in SOME order (the keys tie)
+    val allNull = Seq((None: Option[Long], 2L), (None, 3L), (None, 5L))
+      .toDF("id", "v").repartition(3)
+    val (out, totals) = Relational.globalPrefixSums(allNull, "id", Seq("v"),
+      Seq("p"))
+    assert(totals == Seq(10L))
+    val rows = out.select("p", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(rows.size == 3)
+    assert(rows.map(_._1) == rows.map(_._2).scanLeft(0L)(_ + _).init)
+    // one NULL key among unique keys: exactly the single-window answer,
+    // which sorts the NULL first
+    val mixed = Seq((None: Option[Long], 7L), (Some(1L), 1L), (Some(40L), 2L),
+      (Some(900L), 4L)).toDF("id", "v").repartition(4)
+    val naive = mixed.withColumn("p",
+        coalesce(sum(col("v")).over(Window.orderBy("id")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("v", "p").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val (got, mt) = Relational.globalPrefixSums(mixed, "id", Seq("v"),
+      Seq("p"), nBuckets = 4)
+    assert(got.select("v", "p").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap == naive)
+    assert(naive(7L) == 0L && mt == Seq(14L))
+  }
+
   test("searchBM25: Okapi ranking with inline dl, nanos-exact scores") {
     import graft.operators.Search
     val d = Seq(

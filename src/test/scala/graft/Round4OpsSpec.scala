@@ -776,6 +776,33 @@ class Round4OpsSpec extends AnyFunSuite {
     assert(ids == again)
   }
 
+  test("curateFull: the learned gate scores each row alone, even on a shared id") {
+    import graft.operators.{Curation, TextAnalysis}
+    // two gate-passing fixture docs, one the model keeps and one it drops,
+    // given the SAME id: the row-local gate keeps exactly the kept row (a
+    // gate pooling the id's tokens would keep both or neither) — the
+    // unique-id precondition in Curation's scaladoc
+    val model = TextAnalysis.syntheticQualityModel()
+    val scored = spark.read.parquet(s"${TestSpark.fixtures}/sf0.001/documents.parquet")
+      .filter(TextAnalysis.langId(col("text")) === "en" &&
+        TextAnalysis.qualityScore(col("text")) >= 0.6)
+      .withColumn("keep",
+        TextAnalysis.hashedQualityKeep(col("text"), model, -0.15))
+      .orderBy("doc_id")
+    val kept = scored.filter(col("keep") === true).head()
+    val dropped = scored.filter(col("keep") === false).head()
+    val shared = kept.getAs[Long]("doc_id")
+    val dup = scored.filter(col("doc_id").isin(shared,
+        dropped.getAs[Long]("doc_id")))
+      .drop("keep").withColumn("doc_id", lit(shared))
+    val bench = Seq("zebra quantum xylophone marmalade").toDF("text")
+    val out = Curation.curateFull(dup, "doc_id", "text", bench, "text", model,
+        keepLogit = -0.15, sampleFraction = 1.0)
+      .select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(out == Seq((shared, kept.getAs[String]("text"))))
+  }
+
   test("labelCentroids: hand-computed means, invariant under repartitioning") {
     val df = Seq(
       (1L, Seq(1.0f, 2.0f), "x"),

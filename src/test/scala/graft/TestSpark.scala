@@ -5,6 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared session for every suite (suites run sequentially in the forked
   * test JVM; building a SparkSession per suite would dominate test time). */
 object TestSpark {
+  /** the fixture tables, one `sf*` dir per scale factor (TESTDATA.md) */
+  val fixtures = "/root/testdata"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
